@@ -86,7 +86,7 @@ from etl_jlp_spark.quality import drift, report  # noqa: E402, F401
 # the driver oracles them), then every query rewritten THIS round, the
 # four flagships, and as much of the never-driver-checked tail (45 names
 # as of r11) as fits the ~50-row window.
-_R12_PRIORITY = [
+_R11_PRIORITY = [
     # Round-10 rewrite clusters the driver has NOT yet oracle-verified
     # (VERDICT r10 "What's wrong" #4) — lead the round-11 window.
     "fuzzy_join_editdist",
@@ -104,9 +104,11 @@ _R12_PRIORITY = [
     "winnowing_fingerprint_stats",
     "contrastive_triplets",
     "knn_loo_accuracy",
-    "spearman_corr_matrix",
-    "theil_sen_trend",
     "audio_decode_report",
+    "golden_record_merge",
+    "minhash_recall_report",
+    "hits_authorities",
+    "hits_top_hubs",
     # Flagships — in-window every round.
     "preprocess_pipeline",
     "curate_documents",
@@ -147,7 +149,7 @@ _R12_PRIORITY = [
 
 
 def _rotated() -> None:
-    registry.reorder([n for n in _R12_PRIORITY if n in registry.QUERIES])
+    registry.reorder([n for n in _R11_PRIORITY if n in registry.QUERIES])
 
 
 def entry(spark: SparkSession) -> DataFrame:

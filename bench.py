@@ -1,5 +1,7 @@
-"""Benchmark headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark every registered query at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
+The query list is the registry (``registry.QUERIES``, in the order
+``__spark_entry__.queries()`` returns it); there is no second copy of it.
 Each query is materialized with the noop sink (full compute, no driver
 collect) $SPARK_GRAFT_BENCH_REPS times (default 3) and its MEDIAN is
 recorded, so round-over-round comparisons are median-to-median instead
@@ -21,399 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
-
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier",
-    "events_by_type_day",
-    "top_customers_by_revenue",
-    "sessionize",
-    "session_stats",
-    "time_on_page",
-    "dedup_exact",
-    "window_time",
-    "quality_report",
-    "keywords_extract",
-    "token_count",
-    "text_quality_score",
-    "text_langid",
-    "doc_fingerprint",
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_topk_cosine",
-    "dedup_embedding_cosine",
-    "ingest_incremental_watermark",
-    "q6_revenue_change",
-    "asof_join",
-    "range_band_join",
-    "rolling_user_stats",
-    "pivot_event_counts",
-    "user_enrichment",
-    "keywords_ngrams",
-    "session_window_stats",
-    "events_by_type_day_salted",
-    "q10_returned_items",
-    "q14_promo_revenue",
-    "q19_brand_discounts",
-    "percentile_stats",
-    "quality_report_lineitem",
-    "preprocess_pipeline",
-    "cdc_merge",
-    "exact_keywords_set",
-    "curate_documents",
-    "sliding_weekly_revenue",
-    "stratified_sample",
-    "sequence_packing",
-    "q7_nation_volume",
-    "q13_order_distribution",
-    "q18_large_orders",
-    "quality_array_fields",
-    "dedup_connected_components",
-    "value_histogram",
-    "session_funnel",
-    "q4_order_priority",
-    "q8_market_share",
-    "q9_product_profit",
-    "q11_important_stock",
-    "q15_top_supplier",
-    "q16_part_supplier_cnt",
-    "q17_small_quantity",
-    "q20_excess_shippers",
-    "q21_suppliers_waiting",
-    "q22_global_sales_opportunity",
-    "text_repetition",
-    "gopher_quality_filter",
-    "pii_scrub",
-    "domain_mix_report",
-    "q2_min_cost_supplier",
-    "q12_ship_speed",
-    "embedding_norm_stats",
-    "embedding_label_centroids",
-    "nearest_centroid_assign",
-    "events_rollup_report",
-    "source_keep_rate",
-    # round 2 additions (baseline = BENCH_r02.json, see BASELINE.md)
-    "ann_lsh_topk",
-    "ann_ivf_topk",
-    "time_on_page_incremental",
-    "quality_report_flat",
-    "ingest_full_load_jsonl",
-    "decontaminate_docs",
-    "balance_source_mix",
-    # round 4 additions
-    "tfidf_top_terms",
-    "bm25_search",
-    "ngram_lm_score",
-    "bpe_merge_candidates",
-    "embedding_quantize",
-    "bm25_search_prebuilt",
-    "corpus_index_pipeline",
-    # round 5 additions
-    "scd2_build",
-    "scd2_apply",
-    "dedup_minhash_prebuilt",
-    "fuzzy_join_editdist",
-    "fuzzy_join_prebuilt",
-    "rollup_incremental",
-    "ann_quantized_topk",
-    "timeseries_gapfill",
-    "user_retention_cohorts",
-    "key_skew_report",
-    "psi_drift_report",
-    "quality_percentile_gate",
-    # round 3 additions
-    "approx_sketch_stats",
-    "ann_ivf_topk_prebuilt",
-    "doc_chunk",
-    "paragraph_dedup",
-    "semantic_dedup",
-    "dedup_cluster_representative",
-    "dataset_split",
-    "training_data_pipeline",
-    # r5: complete coverage — every registered query gets a baseline
-    "audit_columns",
-    "compare_with_source",
-    "cumulative_daily_revenue",
-    "dedup_ngram_jaccard",
-    "ingest_full_load",
-    "ingest_jdbc_derby",
-    "props_extract",
-    "quality_clean_rate",
-    "quality_format_check",
-    "session_merge_records",
-    "watermark_update",
-    # round 6 additions
-    "anomaly_zscore",
-    "ewma_daily_revenue",
-    "dsir_select",
-    "bpe_encode",
-    "split_leakage_check",
-    "doc_containment",
-    "dup_span_report",
-    "pmi_collocations",
-    "lexical_diversity",
-    "source_mix_temperature",
-    "softdedup_weights",
-    "ann_recall_report",
-    "embedding_random_projection",
-    "per_source_sample_k",
-    "heavy_hitters_cms",
-    "referential_integrity_report",
-    "dedup_cc_incremental",
-    "bigram_lm_score",
-    "ab_test_report",
-    "seasonal_naive_eval",
-    "cohort_ltv",
-    # round-7 additions
-    "propagate_deletes_report",
-    "semantic_dedup_scaled",
-    "graph_pagerank",
-    "graph_triangle_stats",
-    "minhash_spark_native",
-    "tokenizer_fertility_report",
-    "contamination_ngram_overlap",
-    "quality_isolation_outliers",
-    "gdpr_erasure_audit",
-    "session_conversion_attribution",
-    "entity_resolution_blocking",
-    "session_survival_km",
-    "cusum_changepoint",
-    "docs_length_histogram",
-    "embedding_pca_power",
-    "percentile_bucket_assign",
-    "events_cube_report",
-    # round-7 second wave + late additions
-    "hll_distinct_daily",
-    "ks_drift_report",
-    "mann_whitney_ab",
-    "event_transition_matrix",
-    "interarrival_burstiness",
-    "pareto_frontier_docs",
-    "weighted_sample_es",
-    "dataset_card_report",
-    "graph_label_propagation",
-    "rfm_segmentation",
-    "assoc_rules_events",
-    "benford_digit_report",
-    "holt_linear_eval",
-    "weekday_seasonality_index",
-    "anomaly_mad_daily",
-    "neardup_rate_by_source",
-    "window_funnel_steps",
-    "source_logodds_terms",
-    "kmeans_lloyd_assign",
-    "zorder_layout_report",
-    "mv_join_incremental",
-    "stl_decompose_daily",
-    "snapshot_diff",
-    "bloom_join_prune_report",
-    "session_paths_topk",
-    "time_to_convert_stats",
-    "skey_collision_audit",
-    "revenue_gini_by_nation",
-    "open_orders_timeline",
-    "fd_profile_report",
-    "column_entropy_report",
-    # round-7 regression/graph/profiling wave
-    "ols_discount_elasticity",
-    "acf_daily_revenue",
-    "did_lift_report",
-    "lineitem_corr_matrix",
-    "bootstrap_ci_mean",
-    "calendar_dim",
-    "ship_delay_profile",
-    "equidepth_histogram",
-    "user_event_entropy",
-    "event_weekday_mi",
-    "zipf_rank_slope",
-    "graph_khop_reach",
-    "graph_link_prediction",
-    "graph_modularity",
-    "knn_loo_accuracy",
-    "markov_next_event_eval",
-    "dedup_prefix",
-    "char_bigram_entropy",
-    "part_copurchase_lift",
-    "minhash_recall_report",
-    "dup_cluster_size_histogram",
-    "candidate_key_report",
-    "langid_confusion_report",
-    "revenue_concentration_curve",
-    "orders_monthly_yoy",
-    "events_dau_wau_mau",
-    # round-7 third wave (this session's additions)
-    "ingest_full_load_csv",
-    "ingest_full_load_orc",
-    "theil_sen_trend",
-    "spearman_corr_matrix",
-    "hll_weekly_union",
-    "nb_langid_confusion",
-    "doc_similarity_tfidf_topk",
-    "script_char_profile",
-    "minhash_band_sweep",
-    "cosine_threshold_sweep",
-    "customer_order_concurrency",
-    "contrastive_triplets",
-    "term_freq_spectrum",
-    "source_vocab_overlap",
-    "session_gap_sweep",
-    "cross_source_neardup_matrix",
-    "event_count_dispersion",
-    "hll_rolling_7d",
-    "holt_winters_eval",
-    "embedding_fisher_separation",
-    "hour_of_day_profile",
-    "order_lines_histogram",
-    "topk_movers_wow",
-    "new_vs_returning_daily",
-    # round-8 session additions
-    "readability_report",
-    "partition_size_advisor",
-    "value_mask_profile",
-    "user_active_streaks",
-    "priority_mix_chisq",
-    "kmv_distinct_by_type",
-    "kmv_type_overlap",
-    "centroid_silhouette_report",
-    "vocab_growth_curve",
-    "quality_score_pr_curve",
-    "ann_pq_topk",
-    "hits_authorities",
-    "hits_top_hubs",
-    "ols_cv_eval",
-    "bayesian_ab_conversion",
-    "periodogram_daily_revenue",
-    "conformal_forecast_interval",
-    "robust_revenue_stats",
-    "bottomk_sample_quantiles",
-    "k_anonymity_report",
-    "join_strategy_advisor",
-    "revenue_rollup_shares",
-    "mv_retraction_refresh",
-    "ivf_nprobe_sweep",
-    "embedding_drift_report",
-    "customer_repeat_cohorts",
-    "hilbert_layout_report",
-    "char_coverage_report",
-    "winnowing_fingerprint_stats",
-    # round-8 session wave 2
-    "kendall_tau_daily",
-    "ar1_forecast_eval",
-    "target_encoding_kfold",
-    "mix_shift_decomposition",
-    "calibration_report",
-    "textrank_keywords",
-    "js_divergence_sources",
-    "quantile_normalize_scores",
-    "feature_hash_collisions",
-    "rrf_fusion_topk",
-    "ann_ndcg_eval",
-    "position_attribution_ushape",
-    "fellegi_sunter_weights",
-    "gini_split_finder",
-    "score_lift_deciles",
-    "lm_quality_correlation",
-    "graph_kcore_peel",
-    "embedding_split_leakage",
-    "oov_rate_curve",
-    "cramers_v_matrix",
-    "revenue_grouping_sets",
-    "anova_oneway_value",
-    "pettitt_changepoint",
-    "pacf_daily_revenue",
-    "prf_expansion_terms",
-    "welch_ttest_by_type",
-    "order_reconciliation_report",
-    "kwic_snippets",
-    "ingest_full_load_fixedwidth",
-    "filter_cascade_report",
-    "curriculum_shard_plan",
-    # round-7 session additions
-    "ingest_full_load_xml",
-    "schema_evolution_report",
-    "rolling_distinct_users_exact",
-    "ridge_regression_path",
-    "woe_iv_report",
-    "doc_lang_consistency",
-    "dup_span_excise",
-    "code_prose_ratio",
-    "neyman_allocation_plan",
-    "golden_record_merge",
-    "data_freshness_report",
-    "hodges_lehmann_shift",
-    "ann_ivfpq_topk",
-    "l_diversity_report",
-    "cms_join_size_estimate",
-    "t_closeness_report",
-    "wasserstein_value_drift",
-    "cliffs_delta_value",
-    "runs_test_daily",
-    "jackknife_mean_se",
-    "mcnemar_gate_flips",
-    "brown_forsythe_variance",
-    "simpson_slope_check",
-    "abc_inventory_class",
-    "unpivot_lineitem_metrics",
-    "freedman_diaconis_bins",
-    "ql_dirichlet_search",
-    "shapley_channel_attribution",
-    "mann_kendall_trend",
-    "hill_tail_index",
-    "grubbs_outlier_daily",
-    "partial_corr_matrix",
-    "cochran_armitage_trend",
-    "fleiss_kappa_gates",
-    "pps_systematic_sample",
-    "price_index_report",
-    "capture_recapture_pairs",
-    "davies_bouldin_report",
-    "fdr_drift_gate",
-    "winsorized_trimmed_mean",
-    "hurst_rs_exponent",
-    "energy_distance_drift",
-    "cvm_drift_test",
-    "ab_power_analysis",
-    "quantile_treatment_effect",
-    "haar_wavelet_energy",
-    "sax_weekly_symbols",
-    "gumbel_block_maxima",
-    "rank_biased_overlap",
-    "effective_sample_size",
-    "vif_report",
-    "markov_entropy_rate",
-    "vocab_coverage_estimate",
-    "granger_causality_daily",
-    "graph_degree_assortativity",
-    "term_dispersion_dp",
-    "stylometry_burrows_delta",
-    "newsvendor_stock_level",
-    "kruskal_wallis_value",
-    "friedman_daily_ranks",
-    "scd2_snapshot_asof",
-    "variogram_daily",
-    "taylor_power_law",
-    # round-8 session additions
-    "store_inventory_report",
-    "audio_decode_report",
-    "media_metadata_report",
-    "ivf_append_report",
-    "pq_distortion_report",
-    # round 9
-    "anderson_darling_drift",
-    "ljung_box_daily",
-    "seasonal_mann_kendall",
-    # round 10
-    "matryoshka_truncation_eval",
-    "enrichment_null_pattern",
-    "topic_coherence_report",
-    "compaction_packing_plan",
-    "skew_salting_plan",
-    "ngram_novelty_report",
-    "isotonic_calibration",
-    "sprt_ab_monitor",
-]
 
 
 def main() -> None:
@@ -441,10 +50,10 @@ def main() -> None:
     # Alternate full sweeps (rep 1 of every query, then rep 2, ...) rather
     # than back-to-back reps of one query, so OS cache / JIT drift affects
     # all queries alike and the median is an honest mid-session number.
-    runs: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    runs: dict[str, list[float]] = {name: [] for name in qs}
     errors: dict[str, str] = {}
     for _ in range(REPS):
-        for name in HEADLINE:
+        for name in qs:
             if name in errors:
                 continue
             fn = qs[name]
@@ -478,13 +87,16 @@ def main() -> None:
     # Default record name carries the core count: the driver re-runs the
     # bench at a lower $SPARK_GRAFT_CPUS to measure scaling, and a fixed
     # name let that run overwrite the 32-core record (round-10 lesson —
-    # PERF_r10 lost its per-query ground truth to exactly this).
+    # PERF_r10 lost its per-query ground truth to exactly this). The round
+    # tag comes from $SPARK_GRAFT_BENCH_ROUND, so a new round never
+    # overwrites the previous round's committed record.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    round_tag = os.environ.get("SPARK_GRAFT_BENCH_ROUND", "dev")
     local = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
-            f"BENCH_LOCAL_r14_c{cpus}.json",
+            f"BENCH_LOCAL_{round_tag}_c{cpus}.json",
         ),
     )
     try:

@@ -4,14 +4,36 @@ Mirrors the reference's entity registry (containers + entity paths in
 dwh_lab/dwh/general_lib.py:118-174) as a thin declarative loader; the
 parquet scans stay lazy so Catalyst prunes columns and pushes filters
 into the file source.
+
+Every table read goes through ``read_parquet``, which caches each
+path's schema. A plain ``spark.read.parquet`` launches one Spark job
+to infer the schema from the parquet footers before it returns, about
+0.1 s per read, paid again on every query. The first read of a path
+still infers; later reads hand the stored ``StructType`` to
+``spark.read.schema(...)``, which plans the same scan with no job.
+
+- **Version key.** A file's ``(st_ino, st_size, st_mtime_ns)``; a
+  directory's sorted ``(relpath, size, mtime_ns)`` of every file under
+  it. An ingest or maintenance rewrite changes the key, so the next read
+  infers again and never sees a stale schema.
+- **One entry per path.** A new version replaces the old entry, so the
+  cache is bounded by the number of distinct paths read.
+- **Uncached fallback.** A path ``os.stat`` cannot see (object stores,
+  globs) is read with plain inference every time.
+- **Spark infers, always.** The stored schema is the one Spark itself
+  inferred, under the confs ``_ensure_session_confs`` pins before every
+  read. It is never derived with pyarrow, whose type mapping differs
+  from Spark's (nanosecond timestamps as long, NTZ vs LTZ).
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -58,11 +80,45 @@ def _ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
 
 
+# path -> (version, schema Spark inferred at that version)
+_SCHEMAS: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _version(path: str) -> tuple | None:
+    """What a rewrite of ``path`` must change; None when unstat-able."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_ino, st.st_size, st.st_mtime_ns)
+        files = []
+        for root, _, names in os.walk(path):
+            for f in names:
+                full = os.path.join(root, f)
+                fst = os.stat(full)
+                files.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(files))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema cached per path
+    version (module docstring): no inference job on a repeat read."""
+    _ensure_session_confs(spark)
+    version = _version(path)
+    hit = _SCHEMAS.get(path)
+    if version is not None and hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    if version is not None:
+        _SCHEMAS[path] = (version, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    _ensure_session_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     for col in NANO_TS_COLS.get(name, ()):
         dtype = dict(df.dtypes).get(col)
         if dtype == "bigint":

@@ -292,7 +292,11 @@ def _rice_decode_block(
     "decode one code starting at j" is the jump j → nxt[j]+1+k. All n
     start positions come from pointer-doubling over that jump table
     (log2(n) vectorized gathers), then quotients and the k-bit suffixes
-    are plain gathers. Layout identical to the per-value reader."""
+    are plain gathers. Layout identical to the per-value reader. An
+    empty partition (``n == 0``: the first partition when its length
+    equals the predictor order) decodes to nothing and consumes no bits."""
+    if n == 0:
+        return np.empty(0, dtype=np.int64), pos
     L = len(bits)
     f = np.minimum(nxt + 1 + k, L)  # one-code jump; L = truncation sentinel
     starts = np.empty(n, dtype=np.int64)
@@ -328,7 +332,7 @@ def _rice_read(br: _BitReader, order: int, blocksize: int) -> np.ndarray:
     if blocksize % nparts:
         raise ValueError("block size not divisible by partition count")
     part_len = blocksize >> partition_order
-    if part_len <= order and nparts == 1:
+    if part_len < order or (part_len == order and nparts == 1):
         raise ValueError("first partition has no samples")
     out = np.empty(blocksize - order, dtype=np.int64)
     # unpack the remaining payload bits ONCE; every partition decodes
@@ -458,24 +462,23 @@ def _read_subframe(br: _BitReader, n: int, bps: int) -> np.ndarray:
         # the order-o fixed predictor is EXACTLY the o-th finite
         # difference, so reconstruction is o chained cumsums seeded by
         # the warmup's difference pyramid — no per-sample python loop
-        # (§4). Magnitude guard replaces the old python-int overflow
-        # trap: any level whose values leave ±2^48 can only come from a
-        # corrupt stream (legit bps ≤ 32 keeps every difference level
-        # under ~2^37), and the bound guarantees the next cumsum cannot
-        # wrap int64 (2^48 · 65536 < 2^63).
-        _LIM = np.int64(1) << 48
-        if res.size and int(np.abs(res).max()) >= _LIM:
-            raise ValueError("fixed-predictor residual overflow (corrupt stream)")
+        # (§4). The guard replaces the old python-int overflow trap:
+        # every partial sum of seed + cumsum(level) is bounded by
+        # |seed| + max|level| · len(level), so checking that bound
+        # against 2^63 in python ints before each integration proves
+        # the int64 cumsum cannot wrap, whatever the blocksize. Legit
+        # streams (bps ≤ 32: every difference level under ~2^37) stay
+        # far inside it; only a corrupt stream can trip it.
         out = np.empty(n, dtype=np.int64)
         out[:order] = warm
         w_arr = np.asarray(warm, dtype=np.int64)
         level = res
         for lvl in range(order - 1, -1, -1):
             # D^lvl[order-1] from the warmup pyramid, then integrate
-            seed = np.diff(w_arr, n=lvl)[-1]
-            level = seed + np.cumsum(level)
-            if level.size and int(np.abs(level).max()) >= _LIM:
+            seed = int(np.diff(w_arr, n=lvl)[-1])
+            if level.size and abs(seed) + int(np.abs(level).max()) * level.size >= 1 << 63:
                 raise ValueError("fixed-predictor overflow (corrupt stream)")
+            level = seed + np.cumsum(level)
         out[order:] = level
     elif ftype >= 32:  # LPC
         order = ftype - 32 + 1

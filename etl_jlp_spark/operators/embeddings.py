@@ -760,9 +760,21 @@ def knn_loo_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 dot = qc[:, 0][:, None] * b_V[:, 0][None, :]
                 for i in range(1, dim):
                     dot = dot + qc[:, i][:, None] * b_V[:, i][None, :]
-                cos = dot / (qnc[:, None] * b_cn[None, :])
-                cos[qid[s:e][:, None] == b_ids[None, :]] = -np.inf  # self-pairs
-                keep = cos >= (cos.max(axis=1, keepdims=True) - MARGIN)
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = dot / (qnc[:, None] * b_cn[None, :])
+                self_pair = qid[s:e][:, None] == b_ids[None, :]
+                # a zero-norm side makes the cosine 0/0: a NULL c6 in both
+                # engines, ranked below every real one (NULLS LAST)
+                cos[self_pair | ~np.isfinite(cos)] = -np.inf
+                top = cos.max(axis=1, keepdims=True)
+                keep = (cos > -np.inf) & (cos >= top - MARGIN)
+                # a row with no real cosine: all its non-self pairs are
+                # NULL, so the (c6 DESC, nb ASC) winner is the smallest
+                # non-self neighbor id; an N=1 corpus has none and drops
+                for r in np.flatnonzero(top[:, 0] == -np.inf):
+                    others = np.flatnonzero(~self_pair[r])
+                    if others.size:
+                        keep[r, others[np.argmin(b_ids[others])]] = True
                 qi, ci = np.nonzero(keep)
                 out["qid"].append(qid[s:e][qi])
                 out["true_label"].append(tl[s:e][qi])
@@ -796,7 +808,7 @@ def knn_loo_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "true_label",
         "pred_label",
         "nb",
-        F.round(F.col("dot") / (F.col("qn") * F.col("nn")), 6).alias("c6"),
+        F.round(F.try_divide(F.col("dot"), F.col("qn") * F.col("nn")), 6).alias("c6"),
     )
     # Rank-1 via a map-side-combinable max over (c6, -nb) — NEVER a
     # row_number window, which would shuffle and sort the full N²

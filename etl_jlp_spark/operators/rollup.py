@@ -32,7 +32,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_jlp_spark.catalog import _ensure_session_confs, table_path
+from etl_jlp_spark.catalog import read_parquet, table_path
 from etl_jlp_spark.functions.storekey import corpus_store_key
 from etl_jlp_spark.registry import query
 
@@ -62,8 +62,7 @@ def _cutoff_pred(df: DataFrame, cutoff_ns: int, op: str):
 def _raw_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events with ts still the RAW int64 nano column (filter-pushable);
     callers convert after filtering."""
-    _ensure_session_confs(spark)
-    return spark.read.parquet(table_path(sf_dir, "events"))
+    return read_parquet(spark, table_path(sf_dir, "events"))
 
 
 def _with_day(df: DataFrame) -> DataFrame:
