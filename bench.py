@@ -1,7 +1,8 @@
 """Benchmark every registered query at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-The query list is the registry (``registry.QUERIES``, in the order
-``__spark_entry__.queries()`` returns it); there is no second copy of it.
+The query list is the registry (``__spark_entry__.queries()``), timed in
+sorted-name order so the order does not follow the correctness-window
+rotation; there is no second copy of it.
 Each query is materialized with the noop sink (full compute, no driver
 collect) $SPARK_GRAFT_BENCH_REPS times (default 3) and its MEDIAN is
 recorded, so round-over-round comparisons are median-to-median instead
@@ -32,6 +33,7 @@ def main() -> None:
     spark = get_spark("bench")
     spark.sparkContext.setLogLevel("ERROR")
     qs = ent.queries()
+    names = sorted(qs)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     timings: dict[str, float] = {}
@@ -50,10 +52,10 @@ def main() -> None:
     # Alternate full sweeps (rep 1 of every query, then rep 2, ...) rather
     # than back-to-back reps of one query, so OS cache / JIT drift affects
     # all queries alike and the median is an honest mid-session number.
-    runs: dict[str, list[float]] = {name: [] for name in qs}
+    runs: dict[str, list[float]] = {name: [] for name in names}
     errors: dict[str, str] = {}
     for _ in range(REPS):
-        for name in qs:
+        for name in names:
             if name in errors:
                 continue
             fn = qs[name]
@@ -87,16 +89,16 @@ def main() -> None:
     # Default record name carries the core count: the driver re-runs the
     # bench at a lower $SPARK_GRAFT_CPUS to measure scaling, and a fixed
     # name let that run overwrite the 32-core record (round-10 lesson —
-    # PERF_r10 lost its per-query ground truth to exactly this). The round
-    # tag comes from $SPARK_GRAFT_BENCH_ROUND, so a new round never
-    # overwrites the previous round's committed record.
+    # PERF_r10 lost its per-query ground truth to exactly this). The name
+    # carries no round tag, so it never overwrites an earlier round's
+    # BENCH_LOCAL_r*; git history keeps each round's copy of this one.
+    # $SPARK_GRAFT_BENCH_OUT picks another name.
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    round_tag = os.environ.get("SPARK_GRAFT_BENCH_ROUND", "dev")
     local = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
-            f"BENCH_LOCAL_{round_tag}_c{cpus}.json",
+            f"BENCH_LOCAL_c{cpus}.json",
         ),
     )
     try:

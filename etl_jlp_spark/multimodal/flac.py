@@ -443,6 +443,16 @@ def _write_subframe(bw: _BitWriter, samples: np.ndarray, bps: int, lpc_order: in
                 best_order, n, partition_order=2 if n % 4 == 0 and n // 4 > best_order else 0)
 
 
+def _check_bps(out: np.ndarray, bps: int) -> None:
+    """A predicted subframe reconstructs the encoder's input, which fit
+    ``bps`` signed bits. Anything outside is a corrupt stream, and
+    letting it through would let ``out << wasted`` and the stereo
+    decorrelation (``a << 1``, ``mid + side``) wrap int64 silently."""
+    lim = 1 << (bps - 1)
+    if out.size and (int(out.min()) < -lim or int(out.max()) >= lim):
+        raise ValueError(f"decoded sample outside {bps}-bit range (corrupt stream)")
+
+
 def _read_subframe(br: _BitReader, n: int, bps: int) -> np.ndarray:
     if br.read(1):
         raise ValueError("subframe header padding bit set")
@@ -468,7 +478,8 @@ def _read_subframe(br: _BitReader, n: int, bps: int) -> np.ndarray:
         # against 2^63 in python ints before each integration proves
         # the int64 cumsum cannot wrap, whatever the blocksize. Legit
         # streams (bps ≤ 32: every difference level under ~2^37) stay
-        # far inside it; only a corrupt stream can trip it.
+        # far inside it; only a corrupt stream can trip it. The result
+        # must then still fit the subframe's bps (``_check_bps``).
         out = np.empty(n, dtype=np.int64)
         out[:order] = warm
         w_arr = np.asarray(warm, dtype=np.int64)
@@ -480,6 +491,7 @@ def _read_subframe(br: _BitReader, n: int, bps: int) -> np.ndarray:
                 raise ValueError("fixed-predictor overflow (corrupt stream)")
             level = seed + np.cumsum(level)
         out[order:] = level
+        _check_bps(out, bps)
     elif ftype >= 32:  # LPC
         order = ftype - 32 + 1
         warm = [br.read_signed(bps) for _ in range(order)]
@@ -496,6 +508,7 @@ def _read_subframe(br: _BitReader, n: int, bps: int) -> np.ndarray:
         for i in range(order, n):
             acc = sum(c * int(out[i - 1 - j]) for j, c in enumerate(coefs))
             out[i] = int(res[i - order]) + (acc >> shift)
+        _check_bps(out, bps)
     else:
         raise ValueError(f"reserved subframe type {ftype:06b}")
     return out << wasted

@@ -4,6 +4,7 @@ on zero-norm vectors and a one-vector corpus."""
 
 import hashlib
 import os
+import struct
 
 import duckdb
 import numpy as np
@@ -11,12 +12,17 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from etl_jlp_spark.multimodal.containers import encode_flac_streaminfo
 from etl_jlp_spark.multimodal.flac import (
     _BitReader,
     _BitWriter,
+    _crc8,
+    _crc16,
     _read_subframe,
     _rice_read,
     _rice_write,
+    _utf8_coded_number,
+    decode_flac_samples,
 )
 from tests.conftest import SF_SMALL
 from tools.parity import table_hash
@@ -60,41 +66,83 @@ def test_flac_partition_shorter_than_order_rejected():
         _rice_read(_BitReader(bw.bytes() + bytes(8)), 3, 8)
 
 
-def _fixed_subframe(order: int, big: int, blocksize: int) -> bytes:
-    """FIXED(order) subframe, 16-bit zero warm-up, Rice(k=30) residual:
-    one residual ``big`` followed by zeros."""
-    bw = _BitWriter()
+def _write_fixed_subframe(bw, order: int, residual: list[int], bps: int = 16) -> None:
+    """FIXED(order) subframe, ``bps``-bit zero warm-up, one Rice(k=30)
+    partition holding ``residual``."""
     bw.write(0, 1)
     bw.write(8 + order, 6)
     bw.write(0, 1)
     for _ in range(order):
-        bw.write_signed(0, 16)
+        bw.write_signed(0, bps)
     bw.write(1, 2)  # method 1: 5-bit rice parameters
     bw.write(0, 4)  # one partition
     k = 30
     bw.write(k, 5)
-    for v in [big] + [0] * (blocksize - order - 1):
+    for v in residual:
         u = v << 1 if v >= 0 else ((-v) << 1) - 1
         bw.write_unary(u >> k)
         bw.write(u & ((1 << k) - 1), k)
+
+
+def _fixed_subframe(order: int, residual: list[int], bps: int = 16) -> bytes:
+    bw = _BitWriter()
+    _write_fixed_subframe(bw, order, residual, bps)
     bw.align()
     return bw.bytes()
+
+
+def _spike(big: int, blocksize: int, order: int) -> list[int]:
+    return [big] + [0] * (blocksize - order - 1)
 
 
 def test_flac_fixed_overflow_bound_accounts_for_blocksize():
     # a residual just under the old flat 2^48 limit: integrated twice
     # over a 65536-sample block it leaves int64
     big = (1 << 48) - (1 << 40)
-    data = _fixed_subframe(2, big, 65536)
+    data = _fixed_subframe(2, _spike(big, 65536, 2))
     with pytest.raises(ValueError, match="overflow"):
         _read_subframe(_BitReader(data), 65536, 16)
 
 
-def test_flac_fixed_large_in_bound_residual_decodes_exactly():
-    big = 1 << 40  # 2^40 * 65535 < 2^63: in bound, no wrap possible
-    out = _read_subframe(_BitReader(_fixed_subframe(1, big, 65536)), 65536, 16)
+def test_flac_fixed_large_residual_in_range_decodes_exactly():
+    # residuals of ±2^30 over a 65536-sample block: far inside the
+    # overflow bound, and the samples fit 32 bits
+    big = 1 << 30
+    residual = [big, -big] * ((65536 - 1) // 2) + [big]
+    out = _read_subframe(_BitReader(_fixed_subframe(1, residual, 32)), 65536, 32)
     assert out[0] == 0
-    assert (out[1:] == big).all()
+    assert (out[1::2] == big).all()
+    assert (out[2::2] == 0).all()
+
+
+def test_flac_fixed_sample_outside_bps_rejected():
+    # in the overflow bound, but 2^20 does not fit a 16-bit subframe
+    data = _fixed_subframe(1, _spike(1 << 20, 64, 1))
+    with pytest.raises(ValueError, match="16-bit range"):
+        _read_subframe(_BitReader(data), 64, 16)
+
+
+def test_flac_mid_side_crafted_stream_rejected():
+    # a CRC-valid mid-side frame whose mid subframe integrates a ~2^46
+    # residual to just over 2^62: inside int64, so only the bps check
+    # stops ``mid << 1`` from wrapping into a silent wrong sample
+    n = 65535
+    hdr = bytearray([0xFF, 0xF8, 0x70, (10 << 4) | (0x04 << 1)])
+    hdr += _utf8_coded_number(0) + struct.pack(">H", n - 1)
+    hdr.append(_crc8(bytes(hdr)))
+    bw = _BitWriter()
+    _write_fixed_subframe(bw, 2, _spike((1 << 46) + (1 << 33), n, 2))  # mid, 16 bits
+    bw.write(0, 1)
+    bw.write(0, 6)  # side: CONSTANT 0, 17 bits
+    bw.write(0, 1)
+    bw.write_signed(0, 17)
+    bw.align()
+    frame = bytes(hdr) + bw.bytes()
+    payload = encode_flac_streaminfo(
+        sample_rate=8000, channels=2, bits=16, total_samples=n, min_block=n, max_block=n
+    ) + frame + struct.pack(">H", _crc16(frame))
+    with pytest.raises(ValueError, match="16-bit range"):
+        decode_flac_samples(payload)
 
 
 # ---------------------------------------------------------------------------
